@@ -1,13 +1,14 @@
 """Benchmark of the team_126_spark engine.
 
-    python3 perfbench/run.py --workload {search,suite,stream} --seed N \
+    python3 perfbench/run.py --workload {search,suite} --seed N \
         --seconds S --trace {0,1}
 
 Run from the root of a checkout. The run generates its inputs from the seed,
 starts one session on local[nproc], sets up (session, package ship, input
-staging, an untimed warm pass at the measured scale), measures the workload
-for about S seconds, checks the outputs outside the timed region and prints
-one JSON line last on stdout:
+staging, an untimed warm pass at the measured scale), measures a fixed
+amount of work sized to take about S seconds on a 4-core box (so that the
+amount never depends on how fast it ran), checks the outputs outside the
+timed region and prints one JSON line last on stdout:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
@@ -34,7 +35,7 @@ import sys
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WORKLOADS = ("search", "suite", "stream")
+WORKLOADS = ("search", "suite")
 
 
 def parse_args(argv: list[str]) -> argparse.Namespace:
@@ -76,6 +77,19 @@ def redirect_stderr(path: str) -> int:
     os.close(fd)
     sys.stderr = os.fdopen(2, "w", buffering=1, closefd=False)
     return saved
+
+
+def host_loop_ms() -> float:
+    """Median time of a fixed pure-Python loop: the speed this shared host
+    gave one core at that moment, for reading a run's figures against."""
+    times = []
+    for _ in range(5):
+        t0 = time.perf_counter()
+        s = 0
+        for i in range(200_000):
+            s += i
+        times.append(time.perf_counter() - t0)
+    return 1e3 * sorted(times)[2]
 
 
 def git_commit() -> str | None:
@@ -157,7 +171,7 @@ def main(argv: list[str]) -> int:
         from team_126_spark.session import get_spark
         from team_126_spark.tables import ship_package
 
-        load_before = os.getloadavg()
+        load_before, host_before = os.getloadavg(), host_loop_ms()
         t0 = time.time()
         spark = get_spark("perfbench")
         t1 = time.time()
@@ -175,6 +189,8 @@ def main(argv: list[str]) -> int:
             "environment": environment(spark, args.seed),
             "load_avg_before": load_before,
             "load_avg_after": os.getloadavg(),
+            "host_loop_ms_before": host_before,
+            "host_loop_ms_after": host_loop_ms(),
             "driver_peak_rss_mb": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0,
             **result.record(),
         }

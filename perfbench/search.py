@@ -49,6 +49,7 @@ OPERATOR = {
     "filter": "operators.relational.ordered_limit",
 }
 WARM_REQUESTS = 8
+REQUEST_S = 0.4  # nominal time of one warm request on a 4-core box
 STREAMS = {"warm": 1, "m": 2, "t": 3}  # one probe stream per phase
 
 
@@ -110,26 +111,32 @@ class Search:
             K,
         )
 
-    def loop(self, runner, phase: str, seconds: float | None, count: int | None = None) -> Phase:
+    def loop(self, runner, phase: str, count: int) -> Phase:
         ops, outputs = [], []
         reqs = self.requests(phase)
         t0 = time.time()
-        # stop only after whole rounds, so every kind has the same count
-        while len(ops) % len(KINDS) or (
-            (count is None or len(ops) < count) and (seconds is None or time.time() - t0 < seconds)
-        ):
+        # whole rounds, so every kind has the same count
+        while len(ops) < count or len(ops) % len(KINDS):
             q = next(reqs)
             op, rows = runner.run(q.kind, f"{phase}{len(ops)}", lambda q=q: self.build(q), lambda df: df.collect())
             ops.append(op)
             outputs.append((q, rows))
         wall = time.time() - t0
-        return Phase(ops, [op.wall_s for op in ops], len(ops), wall, outputs)
+        n = len(KINDS)
+        rates = [n / (ops[i + n - 1].end - ops[i].start) for i in range(0, len(ops), n)]
+        return Phase(ops, [op.wall_s for op in ops], len(ops), wall, rates, outputs)
 
     def warm(self) -> None:
-        self.loop(self.ctx.runner(False), "warm", None, WARM_REQUESTS)
+        self.loop(self.ctx.runner(False), "warm", WARM_REQUESTS)
+
+    def count(self) -> int:
+        """A fixed number of requests for the run length: the count must not
+        depend on how fast the requests ran, so that every run reports the
+        same stretch of the session's warm-up."""
+        return max(4 * len(KINDS), round(self.ctx.seconds / REQUEST_S))
 
     def measure(self, runner, phase: str) -> Phase:
-        p = self.loop(runner, phase, self.ctx.seconds)
+        p = self.loop(runner, phase, self.count())
         if runner.traced:
             p.layers = self.operator_layers(p)
         return p
@@ -142,7 +149,7 @@ class Search:
             "search_p50_ms": median(lat_ms),
             "search_tail_ms": tail_percentile(lat_ms),
             "search_n": len(lat_ms),
-            "search_rps": p.units / p.wall_s,
+            "search_rps": median(p.round_rates),
         }
 
     def operator_layers(self, p: Phase) -> dict:

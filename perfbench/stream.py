@@ -1,21 +1,21 @@
-"""`stream`: a micro-batch ingest of staged events files.
+"""The suite's streaming row: a micro-batch ingest of staged events files.
 
-A seeded slice of sf0.1-shaped events is staged as parquet files of 5k rows
-(5% of each file re-sends rows of the same file, as an at-least-once
-source would). The files flow through
+A seeded slice of sf0.1-shaped events is staged as FILES parquet files of
+5k rows (5% of each file re-sends rows of the same file, as an
+at-least-once source would). Every pass of the suite drains the same files
+again, with a fresh checkpoint and sink, through
 
   streaming.stream_events -> message_pipeline (regex parse + stub embedder)
   -> stream_dedup -> run_idempotent_file_sink (per-batch parquet + checkpoint)
 
-with trigger availableNow, one file per micro-batch. A run drains one file
-per FILE_S seconds of run length (at least four files). The sink is then
-checked against the batch message_pipeline + dedup over the same staged
-rows.
+with trigger availableNow, one file per micro-batch. A drain therefore pays
+the query start, the micro-batch, the state store, the WAL and commit
+writes and the query stop. The sink of the last drain is checked against
+the batch message_pipeline + dedup over the same staged rows.
 """
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 import os
 import threading
@@ -37,14 +37,12 @@ from team_126_spark.streaming import (
 from . import fixtures
 from .ops import Op
 from .spans import median
-from .statusstore import CallStats
-from .workloads import Phase
 
+ROW = "stream_ingest"
+FILES = 1
 FILE_ROWS = 5000
 N_USERS = 15_000  # the sf0.1 customer count
 DUP_FRAC = 0.05
-WARM_FILES = 4
-FILE_S = 1.0  # about one warm micro-batch on a 4-core box
 DURATIONS = {
     "addBatch": "streaming.add_batch_ms",
     "queryPlanning": "streaming.query_planning_ms",
@@ -75,138 +73,94 @@ class _Progress(StreamingQueryListener):
         self.done.set()
 
 
-def _epoch(ts: str) -> float:
-    return dt.datetime.fromisoformat(ts.replace("Z", "+00:00")).timestamp()
+class Drain:
+    """What one drain left behind: its sink, run id and progress reports."""
+
+    def __init__(self, out: str, run_id: str | None, reports: list[dict]):
+        self.out = out
+        self.run_id = run_id
+        self.batches = [r for r in reports if r.get("numInputRows", 0) > 0]
 
 
-class Stream:
-    def __init__(self, ctx):
+class Ingest:
+    def __init__(self, ctx, sf_dir: str):
         self.ctx = ctx
         self.spark = ctx.spark
-        self.sf_dir = ctx.path("sf")
-        self.n_files = max(4, round(ctx.seconds / FILE_S))
-        self.sets: dict[str, str] = {}
+        self.sf_dir = sf_dir  # holds the events table the source takes its schema from
+        self.in_dir = ctx.path("in")
 
     def stage(self) -> None:
-        """Stage the warm set and one file set per measured phase."""
-        sizes = {"warm": WARM_FILES, "m": self.n_files}
-        if self.ctx.traced:
-            sizes["t"] = self.n_files
-        n_files = sum(sizes.values())
         rng = np.random.default_rng([self.ctx.seed, 5])
         n_orig = round(FILE_ROWS * (1 - DUP_FRAC))
-        events = fixtures.events_table(rng, n_orig * n_files, N_USERS)
-        pq.write_table(events.slice(0, n_orig), os.path.join(self.sf_dir, "events.parquet"))
+        events = fixtures.events_table(rng, n_orig * FILES, N_USERS)
         mtime = time.time() - 3600
-        i = 0
-        for name, n in sizes.items():
-            d = self.ctx.path("in", name)
-            self.sets[name] = d
-            for _ in range(n):
-                part = events.slice(i * n_orig, n_orig)
-                dups = rng.integers(0, n_orig, FILE_ROWS - n_orig)
-                order = rng.permutation(FILE_ROWS)
-                rows = pa.concat_tables([part, part.take(dups)]).take(order)
-                path = os.path.join(d, f"part-{i:05d}.parquet")
-                pq.write_table(rows, path)
-                # the file source takes files oldest first
-                mtime += 1
-                os.utime(path, (mtime, mtime))
-                i += 1
+        for i in range(FILES):
+            part = events.slice(i * n_orig, n_orig)
+            dups = rng.integers(0, n_orig, FILE_ROWS - n_orig)
+            order = rng.permutation(FILE_ROWS)
+            rows = pa.concat_tables([part, part.take(dups)]).take(order)
+            path = os.path.join(self.in_dir, f"part-{i:05d}.parquet")
+            pq.write_table(rows, path)
+            # the file source takes files oldest first
+            mtime += 1
+            os.utime(path, (mtime, mtime))
 
-    def drain(self, name: str):
-        """One availableNow query over a staged file set; returns the
-        progress reports, the run id and the drain's wall time."""
-        out = self.ctx.path("out", name)
-        ckpt = os.path.join(self.ctx.work, "ckpt", name)
+    def build(self):
+        src = stream_events(self.spark, self.sf_dir, self.in_dir)
+        return stream_dedup(message_pipeline(src, "props"), ["event_id"])
+
+    def drain(self, deduped, tag: str) -> Drain:
+        """Run one availableNow query to its end."""
+        out = self.ctx.path("out", tag)
+        ckpt = os.path.join(self.ctx.work, "ckpt", tag)
         listener = _Progress()
         self.spark.streams.addListener(listener)
         try:
-            t0 = time.time()
-            src = stream_events(self.spark, self.sf_dir, self.sets[name])
-            deduped = stream_dedup(message_pipeline(src, "props"), ["event_id"])
             run_idempotent_file_sink(deduped, out, ckpt)
-            wall = time.time() - t0
             if not listener.done.wait(60):
-                raise RuntimeError(f"no termination event for stream {name}")
+                raise RuntimeError(f"no termination event for drain {tag}")
         finally:
             self.spark.streams.removeListener(listener)
-        return listener.reports, listener.run_id, wall, out
+        return Drain(out, listener.run_id, listener.reports)
 
-    def warm(self) -> None:
-        self.drain("warm")
+    def attach_jobs(self, runner, op: Op, drain: Drain) -> None:
+        """The query's jobs run in its own job group (its run id), not in
+        the group of the call that started it: add them to the action."""
+        stats = runner.store.read_group(drain.run_id)
+        op.stats["action"].add(stats)
+        for j in stats.jobs:
+            runner.tracer.add(f"job {j.job_id}", j.start, j.end, op.span, op.op_id, status=j.status)
 
-    def measure(self, runner, phase: str) -> Phase:
-        sql0 = self.ctx.store.sql_executions()
-        reports, run_id, wall, out = self.drain(phase)
-        batches = [r for r in reports if r.get("numInputRows", 0) > 0]
-        ops = []
-        for r in batches:
-            start = _epoch(r["timestamp"])
-            d = r.get("durationMs", {})
-            ops.append(
-                Op("batch", f"{phase}-b{r['batchId']}", start, start + r["batchDuration"] / 1e3,
-                   d.get("queryPlanning", 0) / 1e3, d.get("addBatch", 0) / 1e3)
-            )
-        p = Phase(ops, [op.wall_s for op in ops], sum(r["numInputRows"] for r in batches), wall, [out])
-        if runner.traced:
-            self.attach_jobs(runner, ops, run_id, wall, phase)
-            p.layers = self.stream_layers(batches)
-            p.layers["spark.sql_executions"] = self.ctx.store.sql_executions() - sql0
-        return p
-
-    def attach_jobs(self, runner, ops: list[Op], run_id: str, wall: float, phase: str) -> None:
-        """Give each micro-batch the jobs its query ran during it, and add
-        the query, batch and job spans."""
-        store, tracer = self.ctx.store, runner.tracer
-        jobs = [store.read_jobs([j]) for j in store.job_ids(run_id)]
-        end = max([op.end for op in ops], default=time.time())
-        qspan = tracer.add("stream query", end - wall, end, None, phase)
-        for op in ops:
-            op.stats["batch"] = CallStats()
-            op.span = tracer.add("micro-batch", op.start, op.end, qspan, op.op_id)
-        for js in jobs:
-            j = js.jobs[0]
-            owner = next((op for op in ops if op.start <= j.start <= op.end), None)
-            if owner is not None:
-                owner.stats["batch"].add(js)
-                tracer.add(f"job {j.job_id}", j.start, j.end, owner.span, owner.op_id, status=j.status)
-
-    def stream_layers(self, batches: list[dict]) -> dict:
+    @staticmethod
+    def layers(drains: list[Drain]) -> dict[str, float]:
+        batches = [b for d in drains for b in d.batches]
         out: dict[str, float] = {}
         for key, name in DURATIONS.items():
-            out[name] = median([r.get("durationMs", {}).get(key, 0) for r in batches])
+            out[name] = median([b.get("durationMs", {}).get(key, 0) for b in batches])
         state = batches[-1].get("stateOperators") or [{}]
         out["streaming.state_rows"] = state[0].get("numRowsTotal", 0)
         out["streaming.state_memory_bytes"] = state[0].get("memoryUsedBytes", 0)
+        out["streaming.batch_ms"] = median([b["batchDuration"] for b in batches])
         return out
 
-    def summarize(self, p: Phase) -> dict:
-        return {
-            "stream_rows_per_s": p.units / p.wall_s,
-            "stream_batch_p50_ms": 1e3 * median(p.latencies_s),
-            "stream_batches": len(p.ops),
-        }
-
-    def check(self, p: Phase) -> tuple[int, int, list[str]]:
-        """Sink rows against the batch pipeline over the same files: every
-        expected row is an attempted operation, every row missing from or
-        extra in the sink a failure."""
-        phase = "t" if self.ctx.traced else "m"
-        staged = self.spark.read.parquet(self.sets[phase])
+    def check(self, drain: Drain) -> list[str]:
+        """Sink rows against the batch pipeline over the same files."""
+        staged = self.spark.read.parquet(self.in_dir)
         for name, dtype in staged.dtypes:
             if dtype == "timestamp_ntz":
                 staged = staged.withColumn(name, F.col(name).cast("timestamp"))
         expected = message_pipeline(staged, "props").dropDuplicates(["event_id"])
-        sink = self.spark.read.parquet(p.outputs[0]).select(*expected.columns)
+        sink = self.spark.read.parquet(drain.out).select(*expected.columns)
         # rows compare by (event_id, hash of the whole row); expected has one
-        # row per event_id, so every sink row beyond the matched ones is extra
+        # row per event_id, so every sink row beyond the matched ones is extra.
+        # (exceptAll over the embedder's output fails inside Spark 4.1.2 with
+        # INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND.)
         keyed = lambda df: df.select("event_id", F.xxhash64(*expected.columns).alias("h"))  # noqa: E731
         want = keyed(expected).localCheckpoint()  # the embedder runs once
         n, n_sink = want.count(), sink.count()
         missing = want.join(keyed(sink), ["event_id", "h"], "left_anti").count()
         extra = n_sink - (n - missing)
-        problems = [f"sink differs: {missing} missing, {extra} extra of {n}"] if missing or extra else []
-        if len(p.ops) != len(os.listdir(self.sets[phase])):
-            problems.append(f"{len(p.ops)} micro-batches for {len(os.listdir(self.sets[phase]))} files")
-        return max(1, n), min(n, missing + extra), problems
+        problems = [f"{ROW} sink differs: {missing} missing, {extra} extra of {n}"] if missing or extra else []
+        if len(drain.batches) != FILES:
+            problems.append(f"{ROW}: {len(drain.batches)} micro-batches for {FILES} files")
+        return problems

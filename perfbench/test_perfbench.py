@@ -81,7 +81,7 @@ def test_benchmark_json_matches_reported_metrics():
         spec = json.load(fh)
     assert {m["name"]: m["unit"] for m in spec["end_to_end"]} == END_TO_END
     assert {m["name"]: m["unit"] for m in spec["per_layer"]} == PER_LAYER
-    assert [w["name"] for w in spec["workloads"]] == ["search", "suite", "stream"]
+    assert [w["name"] for w in spec["workloads"]] == ["search", "suite"]
 
 
 def test_fixtures_are_seeded():
@@ -122,7 +122,7 @@ def test_wrong_result_raises_failed_frac(tmp_path):
         rows = [dict(zip(cols, r)) for r in con.execute(sql).fetchall()]
         ops.append(Op(q.kind, f"m{i}", 0.0, 1.0, 0.5, 0.5))
         outputs.append((q, rows))
-    good = Phase(ops, [1.0] * 8, 8, 8.0, outputs)
+    good = Phase(ops, [1.0] * 8, 8, 8.0, [4.0, 4.0], outputs)
     attempted, failed, problems = s.check(good)
     assert (attempted, failed, problems) == (8, 0, [])
     assert failed_frac(attempted, failed) == 0.0
@@ -131,7 +131,7 @@ def test_wrong_result_raises_failed_frac(tmp_path):
     assert rows, "the corrupted request must have returned rows"
     key = next(iter(rows[0]))
     bad_rows = [dict(rows[0], **{key: rows[0][key] + 1})] + rows[1:]
-    bad = Phase(ops, [1.0] * 8, 8, 8.0, outputs[:3] + [(q, bad_rows)] + outputs[4:])
+    bad = Phase(ops, [1.0] * 8, 8, 8.0, [4.0, 4.0], outputs[:3] + [(q, bad_rows)] + outputs[4:])
     attempted, failed, problems = s.check(bad)
     assert (attempted, failed) == (8, 1) and problems[0].startswith("m3")
     assert failed_frac(attempted, failed) == pytest.approx(1 / 8)

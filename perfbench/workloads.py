@@ -4,11 +4,11 @@ Every workload reports the same end-to-end metrics, each with a
 workload-specific meaning (BENCHMARK.json):
 
   op_p50_ms         median latency of one operation: a kiosk request
-                    (search), a pass over the registry rows (suite), a
-                    micro-batch (stream)
-  throughput_per_s  operations completed per second of measured wall time:
-                    requests (search), registry rows (suite), event rows
-                    (stream)
+                    (search); a pass over the suite's rows, as the sum of
+                    each row's median time (suite)
+  throughput_per_s  operations completed per second, median over rounds:
+                    requests over a round of one request of each kind
+                    (search), rows over a pass (suite)
   setup_s           session start + package ship + input staging + the
                     untimed warm pass at the measured scale
 
@@ -60,8 +60,11 @@ class Phase:
 
     ops: list[Op]
     latencies_s: list[float]  # one per operation, as op_p50_ms counts them
-    units: int  # what throughput_per_s counts
+    units: int  # operations completed
     wall_s: float
+    # operations per second of each round (a request of each kind, a pass),
+    # whose median throughput_per_s reports
+    round_rates: list[float]
     outputs: list = field(default_factory=list)  # kept for the checks
     layers: dict[str, float] = field(default_factory=dict)  # workload-specific
 
@@ -108,8 +111,6 @@ def _workload(name: str, ctx: Context):
         from .search import Search as cls
     elif name == "suite":
         from .suite import Suite as cls
-    elif name == "stream":
-        from .stream import Stream as cls
     else:
         raise ValueError(f"unknown workload {name!r}")
     return cls(ctx)
@@ -130,9 +131,9 @@ def run(name: str, ctx: Context) -> Result:
     e2e = {
         "setup_s": setup_s,
         "op_p50_ms": 1e3 * median(plain.latencies_s),
-        "throughput_per_s": plain.units / plain.wall_s,
+        "throughput_per_s": median(plain.round_rates),
     }
-    detail = wl.summarize(plain)
+    detail = {**wl.summarize(plain), "setup": dict(ctx.setup)}
     layers: dict[str, float] = {}
     mismatches: dict = {}
     checked = plain
