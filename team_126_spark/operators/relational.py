@@ -602,12 +602,17 @@ def expect_checks(
     return out
 
 
+# hierarchy_resolve counts convergence every 2nd round (and always on the
+# last): a round past the fixpoint is a no-op, and each skipped count is
+# one blocking driver action fewer — dedup_components' setting (SCALING.md).
+_CHECK_EVERY = 2
+
+
 def hierarchy_resolve(
     df: DataFrame,
     id_col: str,
     parent_col: str,
     max_iter: int = 20,
-    check_every: int = 2,
     stats: dict | None = None,
 ) -> DataFrame:
     """(id, root_id, depth) for every node of a parent-pointer forest — the
@@ -618,7 +623,7 @@ def hierarchy_resolve(
     (ptr ← ptr[ptr], depth += depth[ptr]), so a depth-d chain resolves in
     ⌈log₂ d⌉ rounds — max_iter=20 covers depth ~10⁶. Per round: ONE
     equi-self-join on the (uniform) id key; localCheckpoint cuts lineage;
-    convergence is CONFIRMED by a count (every `check_every` rounds, and
+    convergence is CONFIRMED by a count (every `_CHECK_EVERY` rounds, and
     always before returning) — never assumed — and failure to converge
     raises, which is also the cycle detector (a cycle never reaches a
     fixpoint; silently looping rows would be wrong answers).
@@ -630,8 +635,6 @@ def hierarchy_resolve(
     """
     if max_iter < 1:
         raise ValueError(f"hierarchy_resolve: max_iter must be >= 1, got {max_iter}")
-    if check_every < 1:
-        raise ValueError(f"hierarchy_resolve: check_every must be >= 1, got {check_every}")
     cur = df.select(
         F.col(id_col).alias("id"),
         F.coalesce(F.col(parent_col), F.col(id_col)).alias("ptr"),
@@ -650,7 +653,7 @@ def hierarchy_resolve(
             F.coalesce(F.col("b.ptr"), F.col("a.ptr")).alias("ptr"),
             (F.col("a.depth") + F.coalesce(F.col("b.depth"), F.lit(0))).alias("depth"),
         ).localCheckpoint()
-        if (i + 1) % check_every == 0 or i == max_iter - 1:
+        if (i + 1) % _CHECK_EVERY == 0 or i == max_iter - 1:
             # fixpoint: nothing moved this round. Comparing total depth is
             # enough — depth strictly increases for any row that advanced.
             moved = (
@@ -784,7 +787,6 @@ def skew_report(
     df: DataFrame,
     key: Column | str,
     top_k: int = 50,
-    prune: bool = True,
 ) -> DataFrame:
     """Heavy-hitter diagnostic for shuffle-key skew: per-key row counts with
     each key's share of the table and the cumulative share of the top keys —
@@ -817,15 +819,14 @@ def skew_report(
     # culprit) and sort LAST on ties — Spark's asc() default is nulls-first,
     # ANSI/DuckDB's is nulls-last, so pin the portable convention.
     order = [F.desc("cnt"), F.asc_nulls_last("key")]
-    if prune:
-        # any partitioning works: per-partition top-k under a TOTAL order
-        # is a superset of the global top-k regardless of row placement
-        wp = Window.partitionBy(F.spark_partition_id()).orderBy(*order)
-        counts = (
-            counts.withColumn("_pr", F.row_number().over(wp))
-            .filter(F.col("_pr") <= top_k)
-            .drop("_pr")
-        )
+    # any partitioning works: per-partition top-k under a TOTAL order
+    # is a superset of the global top-k regardless of row placement
+    wp = Window.partitionBy(F.spark_partition_id()).orderBy(*order)
+    counts = (
+        counts.withColumn("_pr", F.row_number().over(wp))
+        .filter(F.col("_pr") <= top_k)
+        .drop("_pr")
+    )
     w = Window.orderBy(*order)
     cum = Window.orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -1241,7 +1242,6 @@ def label_propagation(
     src_col: str,
     dst_col: str,
     iters: int = 4,
-    encode_ids: bool = False,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007 — LPA): every
@@ -1262,24 +1262,6 @@ def label_propagation(
     symmetrized edge list (as q_label_propagation does) when undirected
     semantics are wanted.
 
-    Scale dial (VERDICT r9 #3, the quality_gate exact=False convention —
-    cheap path default, scale path opt-in): `encode_ids=True` rank-
-    encodes node ids to ints ONCE up front (order-preserving via the
-    range-partitioned two-level rank in `ordered_ranks`, so the
-    lexicographic tie-break is unchanged), the iteration shuffles two
-    ints per edge instead of two strings, and the string ids join back
-    once at the end — pinned identical communities vs the string-native
-    default on the fixture graph; tools/job_metrics.py receipts the
-    per-round shuffle drop (19.75 → 12.29 MiB at sf0.1) in SCALING.md.
-    USAGE RULE (VERDICT r10 #4, measured crossover in SCALING.md §r11):
-    the encode is a one-off (4 fixed joins) while the savings recur per
-    round, so int wins when ROUNDS × ID-WIDTH is large — measured on
-    this box from ~(iters ≥ 8 with URL/UUID-width ids: 19.6 → 15.2 s at
-    1.17M edges); with short ids string-native wins at every feasible
-    local scale (7.4 vs 8.3 s at 1×, 11.5 vs 14.1 s at 4×). On a
-    network-shuffled cluster the per-round bytes dominate and the
-    crossover moves earlier. Default False per the measurements.
-
     Scale shape per round (the pagerank loop pattern): one equi-join of
     the label vector onto the edge list (shuffle on node id), one
     partial-aggregated (node, label) count, one min_by argmax per node —
@@ -1299,20 +1281,6 @@ def label_propagation(
         # same dial as pagerank: a caller that proves its edge list unique
         # skips the full-edge dedup shuffle (guide §2.4); pinned identical
         e = e.distinct()
-    nodes = None
-    if encode_ids:
-        nodes = ordered_ranks(
-            e.select(F.col("a").alias("_n")).union(e.select(F.col("b").alias("_n"))),
-            "_n",
-            "nid",
-        ).localCheckpoint()
-        na = nodes.select(F.col("_n").alias("a"), F.col("nid").alias("_ai"))
-        nb = nodes.select(F.col("_n").alias("b"), F.col("nid").alias("_bi"))
-        e = (
-            e.join(na, "a")
-            .join(nb, "b")
-            .select(F.col("_ai").alias("a"), F.col("_bi").alias("b"))
-        )
     e = e.localCheckpoint()
     # seed from BOTH endpoints (ADVICE r9): dst-only nodes of a directed
     # edge list are communities too, and the neighbor join must find them
@@ -1348,16 +1316,7 @@ def label_propagation(
             # symmetrized inputs never hit it)
             labels = labels.unionByName(stranded)
         labels = labels.localCheckpoint()
-    out = labels.select("node", F.col("lbl").alias("community"))
-    if nodes is not None:
-        nn = nodes.select(F.col("nid").alias("node"), F.col("_n").alias("_ns"))
-        nc = nodes.select(F.col("nid").alias("community"), F.col("_n").alias("_cs"))
-        out = (
-            out.join(nn, "node")
-            .join(nc, "community")
-            .select(F.col("_ns").alias("node"), F.col("_cs").alias("community"))
-        )
-    return out
+    return labels.select("node", F.col("lbl").alias("community"))
 
 
 def sequence_mining(
@@ -1411,7 +1370,6 @@ def sliding_distinct(
     ts_col: str,
     key_col: str,
     window_days: int = 7,
-    exact: bool = True,
     max_exact_span: int = 60,
 ) -> DataFrame:
     """Rolling N-day distinct-key counts — the incremental-dashboard
@@ -1432,43 +1390,21 @@ def sliding_distinct(
     exercised end-to-end under an exact DuckDB twin. Output:
     (day, exact_nd, sketch_ok) for every day with ≥ 1 covering event.
 
-    SPAN BOUND (VERDICT r10 #6, executable): the exact arm's
+    SPAN BOUND (VERDICT r10 #6, executable): the exact count's
     cover-explode multiplies RAW rows by window_days — at a 90-day
-    window that is a 90× explode of the corpus, so exact=True REFUSES
-    above `max_exact_span` days (raise it or opt down explicitly).
-    `exact=False` is the sketch-only plan: per-day HLL sketches (one
-    partial-agg pass over raw rows), after which only the DAILY sketch
-    table — days × window rows, a calendar invariant — explodes into
-    trailing windows. Output there is (day, sketch_nd); pinned within
-    the HLL bound of the exact count in pytest."""
-    if exact and window_days > max_exact_span:
+    window that is a 90× explode of the corpus, so the operator REFUSES
+    above `max_exact_span` days (raise it explicitly to opt in)."""
+    if window_days > max_exact_span:
         raise RuntimeError(
             f"sliding_distinct: window_days={window_days} > "
-            f"max_exact_span={max_exact_span} — the exact arm cover-"
-            f"explodes every raw row {window_days}x; use exact=False "
-            f"(per-day HLL sketches: only the daily sketch table "
-            f"explodes, days x window rows) or raise max_exact_span "
+            f"max_exact_span={max_exact_span} — the exact count cover-"
+            f"explodes every raw row {window_days}x; raise max_exact_span "
             f"if you really mean it"
         )
     day = F.to_date(F.col(ts_col))
     daily = events.select(day.alias("_d"), F.col(key_col).alias("_k")).groupBy(
         "_d"
     ).agg(F.hll_sketch_agg("_k").alias("_sk"))
-    if not exact:
-        return (
-            daily.select(
-                F.explode(
-                    F.sequence(F.col("_d"), F.date_add(F.col("_d"), window_days - 1))
-                ).alias("day"),
-                "_sk",
-            )
-            .groupBy("day")
-            .agg(
-                F.hll_sketch_estimate(F.hll_union_agg("_sk"))
-                .cast("bigint")
-                .alias("sketch_nd")
-            )
-        )
     covered = events.select(
         F.explode(
             F.sequence(day, F.date_add(day, window_days - 1))

@@ -711,17 +711,6 @@ def pii_scrub(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.select(F.col(id_col), scrubbed.alias("scrubbed"), *counts)
 
 
-def extract_coordinates(df: DataFrame, text_col: str) -> DataFrame:
-    """Regex lat/lon extraction from message text (F4; main.py:490-509)."""
-    pat_lat = r"Latitude\s+([-+]?\d+\.?\d*)"
-    pat_lon = r"Longitude\s+([-+]?\d+\.?\d*)"
-    lat = F.regexp_extract(F.col(text_col), pat_lat, 1)
-    lon = F.regexp_extract(F.col(text_col), pat_lon, 1)
-    return df.withColumn(
-        "msg_lat", F.when(lat != "", lat.cast("double"))
-    ).withColumn("msg_lon", F.when(lon != "", lon.cast("double")))
-
-
 def searchable_text(df: DataFrame, cols: list[str], out: str = "searchable_text") -> DataFrame:
     """Lowercase concat of columns (P3; convert_housing_to_json.py:49)."""
     return df.withColumn(out, F.lower(F.concat_ws(" ", *[F.col(c) for c in cols])))
@@ -732,32 +721,21 @@ def quality_gate(
     text_col: str,
     id_col: str,
     group_col: str,
-    exact: bool = True,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Per-group quality gate: keep documents at or above their group's
     median quality score — the relative-threshold curation step (absolute
     thresholds misfire when sources differ in style). One scan computes the
     quality signal; the per-group median is aggregated then BROADCAST back,
     so the gate costs one groupBy shuffle on the (low-cardinality) group
-    key plus a broadcast hash join.
-
-    `exact=True` uses F.percentile (full sort-based exact median — right
-    whenever group count is modest, and required by the DuckDB oracle
-    twin). At 100 TB with millions of groups, `exact=False` routes to
-    percentile_approx (single-pass KLL-style sketch, rank error <=
-    group_rows / accuracy) — same plan shape, the aggregate just stops
-    materializing per-group sorted runs (SURVEY §2.12/L41).
+    key plus a broadcast hash join. The median is F.percentile's exact
+    sort-based one, which the DuckDB quantile_cont twin mirrors.
     """
     q = df.select(
         F.col(id_col), F.col(group_col), quality_expr(F.col(text_col)).alias("quality")
     )
-    med_expr = (
-        F.percentile("quality", F.lit(0.5))
-        if exact
-        else F.percentile_approx("quality", F.lit(0.5), F.lit(int(accuracy)))
+    med = q.groupBy(group_col).agg(
+        F.round(F.percentile("quality", F.lit(0.5)), 6).alias("src_median")
     )
-    med = q.groupBy(group_col).agg(F.round(med_expr, 6).alias("src_median"))
     return (
         q.join(F.broadcast(med), group_col)
         .filter(F.col("quality") >= F.col("src_median"))
@@ -1809,88 +1787,36 @@ def ppl_buckets(
     score_col: str,
     lang_col: str,
     id_col: str,
-    exact: bool = True,
-    accuracy: int = 10_000,
-    scalable: bool | str = False,
-    auto_rows: int = 1_000_000,
 ) -> DataFrame:
     """Per-LANGUAGE perplexity terciles (the CCNet head/middle/tail cut,
     Wenzek et al. 2020) over an already-scored table — the bucketing stage
-    of q_ccnet_buckets, factored out so the cut strategy is a dial
-    (VERDICT r9 #1).
+    of q_ccnet_buckets.
 
-    `exact=True`: ntile(3) over a per-language window ordered by
-    (score, id) — the oracle-mirrorable total order, but each language's
-    ENTIRE row set moves through ONE task (a window partition is a task),
-    so a dominant language at 100 TB funnels ~the whole corpus through a
-    single executor sort.
-
-    `exact=False`: the quality_gate precedent — per-language 1/3 and 2/3
-    cut values via percentile_approx (mergeable KLL-style sketch, fully
-    parallel partial aggregation; rank error ≤ lang_rows / accuracy),
-    BROADCAST back, bucket by comparison. No per-language sort exists
-    anywhere in the plan; the only shuffle is the partial-aggregated
-    groupBy on the language key. Buckets differ from exact only for rows
-    within the sketch's rank bound of a cut (ties at the cut value all
-    land in the lower bucket, where ntile splits them by id) — pinned on
-    the fixture in tests/test_dedup.py.
-
-    `exact=True, scalable=True`: EXACT ntile WITHOUT the per-language
-    single-task window — `relational.grouped_ranks` (range-partitioned
+    Exact ntile(3) over each language ordered by (score, id), computed
+    WITHOUT a per-language window: a window partition is a task, so a
+    dominant language would funnel ~the whole corpus through a single
+    executor sort. Instead `relational.grouped_ranks` (range-partitioned
     two-level per-group rank, task-sized window partitions) plus the
     closed-form ntile from rank and group count, ntile(k) =
     ((rank−1)·k) // n + 1 (reproduces SQL ntile's ceil-sized leading
-    buckets exactly). Pinned bucket-identical to the window ntile in
-    pytest — the strongest form of the VERDICT r9 #1 fix: same answer,
-    no funnel, no approximation. This is the DEFAULT plan the declared
-    `ccnet_buckets` query ships (VERDICT r10 #1).
+    buckets exactly). Pinned bucket-identical to a window ntile in
+    pytest — same answer, no funnel, no approximation (VERDICT r9 #1,
+    r10 #1).
 
-    `scalable="auto"`: observe the largest language's row count (one
-    partial-aggregated count — the hybrid_fusion_adaptive
-    candidate-count precedent) and pick the window path below
-    `auto_rows` rows (cheapest locally) or grouped_ranks above it (no
-    group-sized window ever reaches a task). Both branches are exact
-    and pinned identical, so the switch is invisible in results.
+    NULL language keys form their own bucket group (the join back to
+    the counts is null-SAFE — ADVICE r10)."""
+    from .relational import grouped_ranks
 
-    NULL language keys form their own bucket group on every path (the
-    joins back to cuts/counts are null-SAFE — ADVICE r10)."""
     s, lg = F.col(score_col), F.col(lang_col)
-    if exact and scalable == "auto":
-        biggest = (
-            scored.groupBy(lg.alias("_lang"))
-            .count()
-            .agg(F.max("count"))
-            .first()[0]
-        )
-        scalable = bool(biggest and biggest > auto_rows)
-    if exact and scalable:
-        from .relational import grouped_ranks
-
-        base = scored.localCheckpoint()
-        ranked = grouped_ranks(
-            base, lang_col, [s.asc(), F.col(id_col).asc()], out="_rk"
-        )
-        counts = base.groupBy(lg.alias("_lang")).agg(F.count("*").alias("_n"))
-        nt = ((F.col("_rk") - 1) * 3 / F.col("_n")).cast("int") + 1
-        bucket = F.when(nt == 1, "head").when(nt == 2, "middle").otherwise("tail")
-        return (
-            ranked.join(F.broadcast(counts), lg.eqNullSafe(F.col("_lang")))
-            .select(*scored.columns, bucket.alias("ppl_bucket"))
-        )
-    if exact:
-        nt = F.ntile(3).over(Window.partitionBy(lg).orderBy(s.asc(), F.col(id_col).asc()))
-        bucket = F.when(nt == 1, "head").when(nt == 2, "middle").otherwise("tail")
-        return scored.select(*scored.columns, bucket.alias("ppl_bucket"))
-    cuts = scored.groupBy(lg.alias("_lang")).agg(
-        F.percentile_approx(s, F.lit([1.0 / 3.0, 2.0 / 3.0]), F.lit(int(accuracy))).alias("_cuts")
+    base = scored.localCheckpoint()
+    ranked = grouped_ranks(
+        base, lang_col, [s.asc(), F.col(id_col).asc()], out="_rk"
     )
-    bucket = (
-        F.when(s <= F.col("_cuts")[0], "head")
-        .when(s <= F.col("_cuts")[1], "middle")
-        .otherwise("tail")
-    )
+    counts = base.groupBy(lg.alias("_lang")).agg(F.count("*").alias("_n"))
+    nt = ((F.col("_rk") - 1) * 3 / F.col("_n")).cast("int") + 1
+    bucket = F.when(nt == 1, "head").when(nt == 2, "middle").otherwise("tail")
     return (
-        scored.join(F.broadcast(cuts), lg.eqNullSafe(F.col("_lang")))
+        ranked.join(F.broadcast(counts), lg.eqNullSafe(F.col("_lang")))
         .select(*scored.columns, bucket.alias("ppl_bucket"))
     )
 
@@ -1900,8 +1826,6 @@ def quality_ensemble(
     text_col: str,
     id_col: str,
     group_col: str,
-    scalable: bool | str = False,
-    auto_rows: int = 1_000_000,
 ) -> DataFrame:
     """Multi-signal quality RANK FUSION (the FineWeb/Dolma pattern:
     several weak quality filters, each noisy alone, fused by rank so no
@@ -1913,33 +1837,19 @@ def quality_ensemble(
     heavy-tailed signals because ranks are scale-free and outlier-robust.
 
     Plan shape: ONE tokenize pass computes all three signals (the
-    curate_corpus lesson); three row_number windows all PARTITIONED by
-    the group key (parallel across groups); ranks are integers so the
-    fused mean is exact before its one 6dp round. A group-partitioned
-    window still moves each GROUP through one task — at 100 TB a
-    dominant language funnels its whole row set through one executor
-    sort (the ccnet_buckets finding) — so `scalable=True` swaps every
-    window for `relational.grouped_ranks` (range-partitioned two-level
-    per-group rank: window partitions are task-sized by construction),
-    which is EXACT, not approximate — pinned identical output in
-    pytest. The declared `quality_ensemble` query ships the scalable
-    plan (VERDICT r10 #1: no declared plan funnels a dominant language
-    through one task); `scalable="auto"` observes the largest group's
-    row count (one partial-aggregated count, the hybrid_fusion_adaptive
-    precedent) and switches to grouped_ranks above `auto_rows` rows —
-    both branches exact, so the switch is invisible in results.
+    curate_corpus lesson); each per-group rank is a
+    `relational.grouped_ranks` (range-partitioned two-level per-group
+    rank: window partitions are task-sized by construction), so a
+    dominant language never funnels its whole row set through one
+    executor sort (the ccnet_buckets finding, VERDICT r10 #1). The ranks
+    are EXACT — pinned equal to a group-partitioned row_number in
+    pytest — and integers, so the fused mean is exact before its one 6dp
+    round.
     Output: (id, group, n_tokens, ttr_r, mean_len_r, r_tokens, r_ttr,
     r_len, fused_rank_r) — lower fused rank = higher ensemble
     quality."""
-    from pyspark.sql import Window
-
     from ..functions.text import tokens
-
-    if scalable == "auto":
-        biggest = (
-            df.groupBy(group_col).count().agg(F.max("count")).first()[0]
-        )
-        scalable = bool(biggest and biggest > auto_rows)
+    from .relational import grouped_ranks
 
     t = tokens(F.col(text_col))
     base = df.select(
@@ -1962,51 +1872,27 @@ def quality_ensemble(
         )
         .otherwise(F.lit(0.0))
         .alias("_mlen"),
-    )
-
-    if scalable:
-        from .relational import grouped_ranks
-
-        base = base.localCheckpoint()
-        ranked = base
-        for col, out in (
-            ("n_tokens", "r_tokens"), ("_ttr", "r_ttr"), ("_mlen", "r_len")
-        ):
-            rk = grouped_ranks(
-                base.select(id_col, "grp", col),
-                "grp",
-                [F.desc(col), F.asc(id_col)],
-                out=out,
-            ).select(id_col, out)
-            ranked = ranked.join(rk, id_col)
-        return ranked.select(
-            F.col(id_col),
-            F.col("grp").alias(group_col),
-            "n_tokens",
-            F.round("_ttr", 6).alias("ttr_r"),
-            F.round("_mlen", 6).alias("mean_len_r"),
-            "r_tokens",
-            "r_ttr",
-            "r_len",
-        ).withColumn(
-            "fused_rank_r",
-            F.round((F.col("r_tokens") + F.col("r_ttr") + F.col("r_len")) / 3.0, 6),
-        )
-
-    def rank(col):
-        return F.row_number().over(
-            Window.partitionBy("grp").orderBy(F.desc(col), F.asc(id_col))
-        )
-
-    return base.select(
+    ).localCheckpoint()
+    ranked = base
+    for col, out in (
+        ("n_tokens", "r_tokens"), ("_ttr", "r_ttr"), ("_mlen", "r_len")
+    ):
+        rk = grouped_ranks(
+            base.select(id_col, "grp", col),
+            "grp",
+            [F.desc(col), F.asc(id_col)],
+            out=out,
+        ).select(id_col, out)
+        ranked = ranked.join(rk, id_col)
+    return ranked.select(
         F.col(id_col),
         F.col("grp").alias(group_col),
         "n_tokens",
         F.round("_ttr", 6).alias("ttr_r"),
         F.round("_mlen", 6).alias("mean_len_r"),
-        rank("n_tokens").cast("bigint").alias("r_tokens"),
-        rank("_ttr").cast("bigint").alias("r_ttr"),
-        rank("_mlen").cast("bigint").alias("r_len"),
+        "r_tokens",
+        "r_ttr",
+        "r_len",
     ).withColumn(
         "fused_rank_r",
         F.round((F.col("r_tokens") + F.col("r_ttr") + F.col("r_len")) / 3.0, 6),

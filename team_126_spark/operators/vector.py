@@ -16,6 +16,8 @@ key instead of a cross product.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -408,6 +410,14 @@ def ivf_centroids(
     return [[float(x) for x in r["_v"]] for r in rows]
 
 
+def _unit(c: list[float]) -> list[float]:
+    """A centroid scaled to unit length (a zero vector stays zero) — the
+    driver-side normalization every IVF assignment shares."""
+    v = [float(x) for x in c]
+    n = math.sqrt(sum(x * x for x in v)) or 1.0
+    return [x / n for x in v]
+
+
 def with_ivf_cell(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
     """IVF assignment: nearest centroid by cosine (argmax dot over the
     normalized centroid directions).
@@ -420,24 +430,22 @@ def with_ivf_cell(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> 
     when() (chaining re-embeds the running best into every branch, growing
     the expression tree exponentially with n_cells).
 
-    The centroid matrix is ONE nested-array literal traversed with
+    The centroid matrix is ONE nested-array constant traversed with
     transform() (r12): the previous per-centroid F.array(*[F.lit(x)...])
     expansion put n_cells×dim literal NODES into the plan — 1024 per
     assignment at the declared 16×64 — which (a) made every
     assignment-bearing plan huge (analysis/planning cost, the
     semdedup_index_probe per-step tax) and (b) recompiled as a giant
     generated class that fell out of the codegen cache under a 137-query
-    bench session (the documented ann_ivf 1.5 s ↔ 11 s bimodality). One
-    Literal node + an interpreted HOF pass has none of that; the dot fold,
+    bench session (the documented ann_ivf 1.5 s ↔ 11 s bimodality). The
+    nested array constant-folds to ONE Literal node in the optimized plan
+    (the analyzed plan still holds the CreateArray tree), and an
+    interpreted HOF pass has none of that codegen weight; the dot fold,
     element order, and first-max tie-break are unchanged, so the result is
     bit-identical (pinned vs the broadcast path)."""
     from ..functions.vector import dot
 
-    def unit(c: list[float]) -> list[float]:
-        n = sum(x * x for x in c) ** 0.5 or 1.0
-        return [x / n for x in c]
-
-    cmat = F.lit([unit([float(x) for x in c]) for c in centroids])
+    cmat = F.lit([_unit(c) for c in centroids])
     scores = F.transform(cmat, lambda u: dot(F.col(vec_col), u))
     cell = F.array_position(scores, F.array_max(scores)).cast("int") - 1
     return df.withColumn("ivf_cell", cell)
@@ -446,9 +454,8 @@ def with_ivf_cell(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> 
 def with_ivf_cell_broadcast(
     df: DataFrame, vec_col: str, centroids: list[list[float]]
 ) -> DataFrame:
-    """IVF assignment for LARGE n_cells — the cosine twin of
-    kmeans_assign_broadcast: the unit-normalized centroids become a
-    (cell, direction) TABLE (k rows, broadcast) instead of k inlined
+    """IVF assignment for LARGE n_cells: the unit-normalized centroids
+    become a (cell, direction) TABLE (k rows, broadcast) instead of k inlined
     literal expressions, so k is bounded by broadcast size (~k·dim·8
     bytes — k=100k at dim=64 is 51 MB), not by Janino method limits or
     codegen compile time. Needed when n_cells is sized for the corpus
@@ -478,13 +485,9 @@ def with_ivf_cell_broadcast(
     checkpoints); the uid itself only needs uniqueness WITHIN a branch."""
     from ..functions.vector import dot
 
-    def unit(c: list[float]) -> list[float]:
-        n = sum(x * x for x in c) ** 0.5 or 1.0
-        return [x / n for x in c]
-
     spark = df.sparkSession
     cdf = spark.createDataFrame(
-        [(i, unit([float(x) for x in c])) for i, c in enumerate(centroids)],
+        [(i, _unit(c)) for i, c in enumerate(centroids)],
         "_cell int, _u array<double>",
     )
     score = dot(F.col(vec_col), F.col("_u"))
@@ -521,11 +524,7 @@ def ivf_candidates(
     their own scoring/ordering — e.g. the oracle-twin declared query)."""
     cents = centroids if centroids is not None else ivf_centroids(df, vec_col, id_col, n_cells)
 
-    def unit(c: list[float]) -> list[float]:
-        n = sum(x * x for x in c) ** 0.5 or 1.0
-        return [x / n for x in c]
-
-    scored = [(i, sum(a * b for a, b in zip(probe, unit(c)))) for i, c in enumerate(cents)]
+    scored = [(i, sum(a * b for a, b in zip(probe, _unit(c)))) for i, c in enumerate(cents)]
     probe_cells = [i for i, _ in sorted(scored, key=lambda t: -t[1])[:nprobe]]
     return with_ivf_cell(df, vec_col, cents).filter(F.col("ivf_cell").isin(probe_cells))
 
@@ -726,46 +725,6 @@ def quantized_knn(
 KMEANS_MAX_KDIM = 32_768
 
 
-def kmeans_assign_broadcast(
-    df: DataFrame, vec_col: str, id_col: str, centroids: list[list[float]]
-) -> DataFrame:
-    """Centroid assignment for LARGE k — the alternative the kmeans_lloyd
-    max_kdim guardrail names, shipped: centroids become a (cell, centroid)
-    TABLE (k rows, broadcast), every vector joins against all k, and one
-    min_by aggregate picks the nearest cell. No k-literal codegen
-    expression, so k is bounded by broadcast size (~k·dim·8 bytes — k=100k
-    at dim=64 is 51 MB, still broadcastable), not by Janino method limits.
-
-    Scale shape: broadcast nested-loop join emits n·k slim (id, cell, d2)
-    rows, but rows for one id are CONSECUTIVE in the same task, so the
-    min_by partial aggregation collapses them map-side — the shuffle
-    carries n rows, not n·k. Tie-break matches the codegen path exactly:
-    equal distances go to the lowest cell index (min_by on the
-    (d2, cell) struct's lexicographic order).
-    """
-    spark = df.sparkSession
-    cdf = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, _centroid array<double>",
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col(vec_col),
-            F.col("_centroid"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda a, v: a + v,
-    )
-    return (
-        df.filter(F.col(vec_col).isNotNull())
-        .join(F.broadcast(cdf))
-        .select(F.col(id_col), F.col("cell"), d2.alias("_d2"))
-        .groupBy(id_col)
-        .agg(F.min_by("cell", F.struct("_d2", "cell")).alias("cell"))
-    )
-
-
 def kmeans_lloyd(
     df: DataFrame,
     vec_col: str,
@@ -774,7 +733,6 @@ def kmeans_lloyd(
     iters: int = 5,
     dim: int = 64,
     stats: dict | None = None,
-    max_kdim: int | None = KMEANS_MAX_KDIM,
 ) -> DataFrame:
     """Lloyd k-means over an embedding column — the clustering companion to
     IVF (whose centroids are a cheap md5 sample; run this when cluster
@@ -793,17 +751,17 @@ def kmeans_lloyd(
     lineage (each round's plan starts from the raw scan + fresh literals).
     Empty cells keep their previous centroid (the standard Lloyd fix).
     Pass `stats={}` to read back per-round inertia (monotonically
-    non-increasing — property-tested).
+    non-increasing — property-tested). Raises before any job runs when
+    k·dim exceeds KMEANS_MAX_KDIM.
     """
-    if max_kdim is not None and k * dim > max_kdim:
+    if k * dim > KMEANS_MAX_KDIM:
         raise ValueError(
-            f"kmeans_lloyd: k*dim = {k * dim} > max_kdim={max_kdim} — the "
-            f"assignment step inlines k centroid literals into one codegen "
-            f"expression, which degrades (interpreted fallback, Janino "
-            f"method-size limit) at this size; for large k use "
-            f"kmeans_assign_broadcast (the shipped (cell, centroid) "
-            f"broadcast-join + min_by path), or pass a higher max_kdim "
-            f"(or None) if you really mean it"
+            f"kmeans_lloyd: k*dim = {k * dim} > KMEANS_MAX_KDIM="
+            f"{KMEANS_MAX_KDIM} — the assignment step inlines k centroid "
+            f"literals into one codegen expression, which degrades "
+            f"(interpreted fallback, Janino method-size limit) at this "
+            f"size; large k needs the assignment as a broadcast join "
+            f"against a (cell, centroid) table"
         )
     cents = ivf_centroids(df, vec_col, id_col, k)
     if len(cents) < k:
@@ -1014,8 +972,8 @@ def pca_power(
         more than the Arrow kernel pays for the same products).
         `gram='codegen'`: the fully-declarative nested-transform explode
         feeding a partially-aggregated groupBy(i, j) — survives as the
-        pinned reference kernel (the kmeans_assign_broadcast /simhash
-        precedent; test_pca_gram_arrow_matches_codegen pins equality).
+        pinned reference kernel (the simhash precedent;
+        test_pca_gram_arrow_matches_codegen pins equality).
         Per-dimension means ride the same pass (arrow) or a posexplode +
         partial agg (codegen).
       - everything after the two aggregates runs on dim×dim-row tables
@@ -1141,7 +1099,7 @@ def pca_power(
 
     spark = df.sparkSession
     v = spark.range(dim).select(
-        F.col("id").cast("int").alias("i"), F.lit(1.0 / dim**0.5).alias("v")
+        F.col("id").cast("int").alias("i"), F.lit(1.0 / math.sqrt(dim)).alias("v")
     )
     for _ in range(rounds):
         w = (
@@ -1435,106 +1393,6 @@ def hard_negatives(
     )
 
 
-def kmeans_lloyd_distributed(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int = 8,
-    iters: int = 5,
-    stats: dict | None = None,
-) -> DataFrame:
-    """kmeans_lloyd with the centroid state kept IN THE CLUSTER — the
-    large-k / large-dim regime (VERDICT r8 watch item: the literal-path
-    update loop round-trips k·dim means through the driver every round;
-    here NO driver collect exists anywhere in the loop). Centroids live
-    as a broadcast (cell, centroid) table: assignment is the
-    kmeans_assign_broadcast shape (n·k slim rows collapsed map-side by
-    min_by, shuffle carries n rows), the update is one posexplode +
-    partial-agg avg per (cell, pos) rebuilt into arrays with
-    array_sort(collect_list(struct(pos, m))), and the k-row table is
-    localCheckpointed per round (plan depth linear — the logreg_gd
-    rule). Empty cells keep their previous centroid via left-join
-    coalesce. Init is the same bounded ivf_centroids md5 sample.
-
-    Semantics pinned equal to kmeans_lloyd on the fixture corpus
-    (identical init, per-round round-6 centroid quantization, identical
-    (d2, cell) tie-break; the one theoretical divergence is Python
-    HALF_EVEN vs Spark HALF_UP rounding on an exact 5e-7 boundary — a
-    measure-zero event for real-valued means, and the parity test would
-    surface it). `stats` adds one inertia action per round (stats-mode
-    only — without it the loop runs zero driver-facing actions beyond
-    the checkpoint jobs)."""
-    cents0 = ivf_centroids(df, vec_col, id_col, k)
-    if len(cents0) < k:
-        raise ValueError(
-            f"kmeans_lloyd_distributed: corpus has only {len(cents0)} "
-            f"non-null vectors < k={k}"
-        )
-    spark = df.sparkSession
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents0)],
-        "cell int, _centroid array<double>",
-    ).localCheckpoint()
-    base = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), F.col(vec_col).alias("_v"))
-        .localCheckpoint()
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("_v"),
-            F.col("_centroid"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda a, v: a + v,
-    )
-    inertia_hist: list[float] = []
-    for _ in range(int(iters)):
-        assign = (
-            base.join(F.broadcast(cent_df))
-            .select(id_col, "_v", "cell", d2.alias("_d2"))
-            .groupBy(id_col)
-            .agg(
-                F.first("_v").alias("_v"),
-                F.min_by("cell", F.struct("_d2", "cell")).alias("cell"),
-                F.min("_d2").alias("_d2"),
-            )
-        )
-        upd = (
-            assign.select("cell", F.posexplode("_v").alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(F.round(F.avg(F.col("val").cast("double")), 6).alias("m"))
-        )
-        new_c = upd.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("_new")
-        )
-        if stats is not None:
-            inertia = assign.agg(F.sum("_d2")).first()[0]
-            inertia_hist.append(round(float(inertia), 6))
-        cent_df = (
-            cent_df.join(new_c, "cell", "left")
-            .select("cell", F.coalesce("_new", "_centroid").alias("_centroid"))
-            .localCheckpoint()
-        )
-    final = (
-        base.join(F.broadcast(cent_df))
-        .select(id_col, "cell", d2.alias("_d2"))
-        .groupBy(id_col)
-        .agg(F.min_by("cell", F.struct("_d2", "cell")).alias("cell"))
-    )
-    if stats is not None:
-        stats["inertia"] = inertia_hist
-        stats["centroids"] = [
-            [float(x) for x in r["_centroid"]]
-            for r in cent_df.orderBy("cell").collect()
-        ]
-    return final.select(id_col, "cell")
-
-
 def hard_negatives_scoped(
     corpus: DataFrame,
     anchors: DataFrame,
@@ -1545,7 +1403,6 @@ def hard_negatives_scoped(
     n_cells: int = 16,
     nprobe: int = 2,
     centroids: list[list[float]] | None = None,
-    assign: str = "literal",
 ) -> DataFrame:
     """The 100 TB path for `hard_negatives` (VERDICT r9 #2): mine each
     anchor's top-k different-label negatives from its IVF NEIGHBORHOOD
@@ -1559,15 +1416,12 @@ def hard_negatives_scoped(
     the ones probed — recall@k vs the exact pass is pinned ≥ 8/10 in
     pytest (the ann_quantized precedent).
 
-    Plan shape: one map-only cell assign over the corpus — `assign=
-    "literal"` (with_ivf_cell, codegen argmax; right for small n_cells)
-    or `assign="broadcast"` (with_ivf_cell_broadcast — the semdedup
-    recipe's dial for n_cells ∝ corpus, where literal argmax is
-    codegen-compile-bound; pinned result-identical in pytest) — then an
-    anchor→cell probe via a broadcast join on the (n_cells)-row
-    centroid table + per-anchor top-nprobe, ONE equi-join on the cell
-    id (hash join, no BNLJ) with the different-label residual, and the
-    same per-anchor window top-k as the exact pass. At ingest scale
+    Plan shape: one map-only cell assign over the corpus (with_ivf_cell's
+    argmax over the centroid constant), then an anchor→cell probe via a
+    broadcast join on the (n_cells)-row centroid table + per-anchor
+    top-nprobe, ONE equi-join on the cell id (hash join, no BNLJ) with
+    the different-label residual, and the same per-anchor window top-k
+    as the exact pass. At ingest scale
     the corpus side rides a `partitionBy("ivf_cell")` layout so each
     anchor's probe reads only its cells' files. Centroids are the
     deterministic md5-sample of `ivf_centroids` — the same family the
@@ -1583,19 +1437,12 @@ def hard_negatives_scoped(
         else ivf_centroids(corpus, vec_col, id_col, n_cells)
     )
 
-    def unit(c: list[float]) -> list[float]:
-        n = sum(x * x for x in c) ** 0.5 or 1.0
-        return [x / n for x in c]
-
     spark = corpus.sparkSession
     cdf = spark.createDataFrame(
-        [(i, unit([float(x) for x in c])) for i, c in enumerate(cents)],
+        [(i, _unit(c)) for i, c in enumerate(cents)],
         "_cell int, _u array<double>",
     )
-    if assign not in ("literal", "broadcast"):
-        raise ValueError(f"hard_negatives_scoped: unknown assign={assign!r}")
-    assigner = with_ivf_cell if assign == "literal" else with_ivf_cell_broadcast
-    tagged = assigner(
+    tagged = with_ivf_cell(
         corpus.filter(F.col(vec_col).isNotNull()), vec_col, cents
     ).select(
         F.col(id_col).alias("negative_id"),
@@ -1841,7 +1688,7 @@ def mmr_select(
         acc = 0.0
         for x in v:
             acc = acc + float(x) * float(x)
-        return acc ** 0.5
+        return math.sqrt(acc)
 
     def _sim_to(cvec, cnorm: float):
         # cosine against the freshly picked (collected) vector with BOTH

@@ -1028,60 +1028,6 @@ def test_fim_split_reassembles_and_selects_half(spark):
     assert again == {d: tuple(r) for d, r in got.items()}
 
 
-def test_ppl_buckets_approx_dial_matches_exact(spark):
-    """VERDICT r9 #1: the scale-safe ccnet cut (exact=False —
-    per-language percentile_approx cut values broadcast back) is pinned
-    against the exact ntile path on the fixture: identical buckets up to
-    the approx rank bound (mismatch only within ties/rank-error of a cut
-    value), per-(lang, bucket) counts within the tie width, and the
-    approx plan contains NO window/sort — the per-language single-task
-    funnel is gone."""
-    from team_126_spark.operators.textops import bigram_surprisal, ppl_buckets
-    from team_126_spark.queries import load
-
-    sf = "/root/testdata/sf0.001"
-    docs = load(spark, sf, "documents")
-    scored = (
-        docs.select("doc_id", "lang")
-        .join(bigram_surprisal(docs, "text", "doc_id"), "doc_id")
-        .localCheckpoint()
-    )
-    exact = {
-        r["doc_id"]: (r["lang"], r["ppl_bucket"])
-        for r in ppl_buckets(scored, "surprisal", "lang", "doc_id", exact=True).collect()
-    }
-    approx = {
-        r["doc_id"]: (r["lang"], r["ppl_bucket"])
-        for r in ppl_buckets(
-            scored, "surprisal", "lang", "doc_id", exact=False
-        ).collect()
-    }
-    assert set(exact) == set(approx) and len(exact) == 500
-    mismatched = [d for d in exact if exact[d] != approx[d]]
-    # rank bound: at accuracy=10k on <=500-row languages the sketch is
-    # exact; residual mismatches can only be ties AT a cut value, which
-    # ntile splits by doc_id but the value comparison cannot
-    assert len(mismatched) <= 0.02 * len(exact), len(mismatched)
-    from collections import Counter
-
-    ce, ca = Counter(exact.values()), Counter(approx.values())
-    assert all(abs(ce[k] - ca[k]) <= 2 for k in set(ce) | set(ca)), (ce, ca)
-
-    # plan shape: no Window (and hence no single-task per-lang sort)
-    # anywhere in the approx bucketing plan; the exact path has the ntile
-    ap = (
-        ppl_buckets(scored, "surprisal", "lang", "doc_id", exact=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    ep = (
-        ppl_buckets(scored, "surprisal", "lang", "doc_id", exact=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # ("ntile(3)" not bare "ntile" — percentile_approx contains the substring)
-    assert "Window" not in ap and "ntile(3)" not in ap
-    assert "ntile(3)" in ep
-
-
 def test_quality_ensemble_hand_ranks(spark):
     """Hand-built group: ranks per signal and the fused mean are exactly
     the hand computation; ranks stay within-language."""
@@ -1168,10 +1114,12 @@ def test_bpe_apply_round_trips_training_merges(spark):
 
 
 def test_ppl_buckets_scalable_exact_identical_to_ntile(spark):
-    """The exact+scalable path (grouped_ranks + closed-form ntile) is
-    BUCKET-IDENTICAL to the window ntile on the fixture — same answer,
-    no per-language single-task window, no approximation (the strongest
-    form of the ccnet scale fix)."""
+    """ppl_buckets (grouped_ranks + closed-form ntile) is BUCKET-IDENTICAL
+    to an inline per-language window ntile(3) on the fixture — same
+    answer, no per-language single-task window, no approximation (the
+    strongest form of the ccnet scale fix)."""
+    from pyspark.sql import Window
+
     from team_126_spark.operators.textops import bigram_surprisal, ppl_buckets
     from team_126_spark.queries import load
 
@@ -1182,15 +1130,16 @@ def test_ppl_buckets_scalable_exact_identical_to_ntile(spark):
         .join(bigram_surprisal(docs, "text", "doc_id"), "doc_id")
         .localCheckpoint()
     )
+    nt = F.ntile(3).over(
+        Window.partitionBy("lang").orderBy(F.asc("surprisal"), F.asc("doc_id"))
+    )
     win = {
-        r["doc_id"]: r["ppl_bucket"]
-        for r in ppl_buckets(scored, "surprisal", "lang", "doc_id", exact=True).collect()
+        r["doc_id"]: ["head", "middle", "tail"][r["nt"] - 1]
+        for r in scored.select("doc_id", nt.alias("nt")).collect()
     }
     sca = {
         r["doc_id"]: r["ppl_bucket"]
-        for r in ppl_buckets(
-            scored, "surprisal", "lang", "doc_id", exact=True, scalable=True
-        ).collect()
+        for r in ppl_buckets(scored, "surprisal", "lang", "doc_id").collect()
     }
     assert win == sca and len(win) == 500
 

@@ -388,8 +388,8 @@ def test_kmeans_lloyd_properties(spark):
 
 def test_kmeans_kdim_guardrail(spark):
     """VERDICT r4 #3: k*dim above the codegen-safe ceiling raises (naming
-    the broadcast-join alternative) instead of silently degrading to
-    interpreted evaluation; max_kdim=None opts out; the ceiling itself
+    the broadcast-join alternative) before any job runs, instead of
+    silently degrading to interpreted evaluation; the ceiling itself
     admits the documented k=512 x dim=64 point."""
     import pytest
 
@@ -397,15 +397,9 @@ def test_kmeans_kdim_guardrail(spark):
     from team_126_spark.tables import table
 
     emb = table(spark, "/root/testdata/sf0.001", "embeddings")
-    with pytest.raises(ValueError, match="max_kdim.*broadcast"):
+    with pytest.raises(ValueError, match="KMEANS_MAX_KDIM.*broadcast"):
         kmeans_lloyd(emb, "embedding", "vec_id", k=1024, iters=1, dim=64)
     assert 512 * 64 <= KMEANS_MAX_KDIM
-    # the raise is pre-flight: no job ran, so opting out still plans fine
-    # (don't execute k=1024 here — that's the expensive path being guarded)
-    df = kmeans_lloyd(
-        emb, "embedding", "vec_id", k=2, iters=1, dim=64, max_kdim=None
-    )
-    assert df.columns == ["vec_id", "cell"]
 
 
 def test_diversity_sample_quota_and_stability(spark):
@@ -427,43 +421,6 @@ def test_diversity_sample_quota_and_stability(spark):
     assert sorted(r["vec_id"] for r in again.collect()) == sorted(
         r["vec_id"] for r in rows
     )
-    emb.unpersist()
-
-
-def test_kmeans_assign_broadcast_matches_codegen(spark):
-    """The large-k broadcast-join assignment is cell-for-cell identical to
-    the codegen literal-expression path, including lowest-cell tie-breaks."""
-    from team_126_spark.operators.vector import (
-        ivf_centroids,
-        kmeans_assign_broadcast,
-        kmeans_lloyd,
-    )
-    from team_126_spark.tables import table
-
-    emb = table(spark, "/root/testdata/sf0.01", "embeddings").cache()
-    stats: dict = {}
-    codegen = {
-        r["vec_id"]: r["cell"]
-        for r in kmeans_lloyd(
-            emb, "embedding", "vec_id", k=8, iters=2, stats=stats
-        ).collect()
-    }
-    broadcast = {
-        r["vec_id"]: r["cell"]
-        for r in kmeans_assign_broadcast(
-            emb, "embedding", "vec_id", stats["centroids"]
-        ).collect()
-    }
-    assert codegen == broadcast
-    # explicit tie: two centroids at the same point -> lowest cell wins
-    df = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 2.0])], ["id", "v"])
-    cells = {
-        r["id"]: r["cell"]
-        for r in kmeans_assign_broadcast(
-            df, "v", "id", [[0.0, 0.0], [0.0, 0.0], [0.0, 2.0]]
-        ).collect()
-    }
-    assert cells == {1: 0, 2: 2}
     emb.unpersist()
 
 
@@ -706,38 +663,47 @@ def test_hard_negatives_matches_bruteforce(spark):
         assert all(l != al for _, l, _ in negs)
 
 
-def test_kmeans_distributed_matches_literal(spark):
-    """The no-driver-collect update loop (centroid state as a broadcast
-    table, VERDICT r8 watch item) produces the IDENTICAL assignment and
-    per-round inertia as the literal-path kmeans_lloyd: same md5-sample
-    init, same round-6 centroid quantization, same (d2, cell) tie-break,
-    same empty-cell retention."""
-    from team_126_spark.operators.vector import kmeans_lloyd, kmeans_lloyd_distributed
+def test_kmeans_lloyd_matches_numpy_reference(spark):
+    """kmeans_lloyd equals a NumPy Lloyd loop run from the same md5-sample
+    init: same per-round round-6 centroid quantization, lowest-cell
+    tie-break and empty-cell retention, so the same assignment, final
+    centroids and per-round inertia."""
+    import numpy as np
+
+    from team_126_spark.operators.vector import ivf_centroids, kmeans_lloyd
     from team_126_spark.queries import _planted_neardup_corpus
     from team_126_spark.tables import table
 
     corpus = _planted_neardup_corpus(
         table(spark, "/root/testdata/sf0.001", "embeddings")
-    )
-    s_lit, s_dist = {}, {}
-    lit = {
+    ).localCheckpoint()
+    stats = {}
+    got = {
         r["vec_id"]: r["cell"]
         for r in kmeans_lloyd(
-            corpus, "embedding", "vec_id", k=8, iters=4, stats=s_lit
+            corpus, "embedding", "vec_id", k=8, iters=4, stats=stats
         ).collect()
     }
-    dist = {
-        r["vec_id"]: r["cell"]
-        for r in kmeans_lloyd_distributed(
-            corpus, "embedding", "vec_id", k=8, iters=4, stats=s_dist
-        ).collect()
-    }
-    assert dist == lit and len(lit) > 0
-    assert s_dist["inertia"] == s_lit["inertia"]
-    assert s_dist["centroids"] == s_lit["centroids"]
+
+    rows = corpus.filter("embedding IS NOT NULL").collect()
+    ids = [r["vec_id"] for r in rows]
+    x = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    cents = np.array(ivf_centroids(corpus, "embedding", "vec_id", 8))
+    inertia = []
+    for _ in range(4):
+        d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+        cell = d2.argmin(axis=1)
+        inertia.append(d2.min(axis=1).sum())
+        for c in range(8):
+            if (cell == c).any():
+                cents[c] = np.round(x[cell == c].mean(axis=0), 6)
+    cell = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+    assert got == dict(zip(ids, cell.tolist())) and len(got) == 532
+    np.testing.assert_allclose(stats["centroids"], cents, rtol=0, atol=2e-6)
+    np.testing.assert_allclose(stats["inertia"], inertia, rtol=1e-9)
     # inertia is monotonically non-increasing (Lloyd invariant)
     assert all(
-        a >= b - 1e-6 for a, b in zip(s_dist["inertia"], s_dist["inertia"][1:])
+        a >= b - 1e-6 for a, b in zip(stats["inertia"], stats["inertia"][1:])
     )
 
 
@@ -893,27 +859,55 @@ def test_kcenter_select_farthest_point_traversal(spark):
 
 
 def test_hard_negatives_scoped_broadcast_assign_identical(spark):
-    """assign="broadcast" (the semdedup large-n_cells recipe) returns the
-    IDENTICAL mined set to the literal-argmax assign — the cell
-    assignment is pinned bit-identical upstream, so the whole scoped
-    pass must agree row-for-row."""
-    from team_126_spark.operators.vector import hard_negatives_scoped
+    """The scoped pass returns the IDENTICAL mined set to a reference that
+    assigns cells with the broadcast-join assignment
+    (with_ivf_cell_broadcast) and does the centroid probe and the
+    per-anchor top-k in driver-side Python — row-for-row."""
+    import math
+
+    from team_126_spark.operators.vector import (
+        hard_negatives_scoped,
+        ivf_centroids,
+        with_ivf_cell_broadcast,
+    )
     from team_126_spark.tables import table
 
     emb = table(spark, "/root/testdata/sf0.001", "embeddings")
     anchors = emb.filter(F.col("vec_id") < 32)
-    key = lambda r: tuple(str(v) for v in r)  # noqa: E731
-    lit = sorted(
-        map(key, hard_negatives_scoped(
-            emb, anchors, "embedding", "vec_id", "label", k=3, assign="literal"
-        ).collect())
+    got = sorted(
+        (r["anchor_id"], r["negative_id"], r["negative_label"], r["cos_sim"])
+        for r in hard_negatives_scoped(
+            emb, anchors, "embedding", "vec_id", "label", k=3
+        ).collect()
     )
-    bk = sorted(
-        map(key, hard_negatives_scoped(
-            emb, anchors, "embedding", "vec_id", "label", k=3, assign="broadcast"
-        ).collect())
-    )
-    assert lit == bk and len(lit) == 96
+
+    def dot(a, b):
+        return sum(float(x) * float(y) for x, y in zip(a, b))
+
+    def cos(a, b):
+        na, nb = math.sqrt(dot(a, a)), math.sqrt(dot(b, b))
+        return dot(a, b) / (na * nb) if na and nb else 0.0
+
+    cents = ivf_centroids(emb, "embedding", "vec_id", 16)
+    units = [[x / (math.sqrt(dot(c, c)) or 1.0) for x in c] for c in cents]
+    rows = [
+        (r["vec_id"], r["label"], r["embedding"], r["ivf_cell"])
+        for r in with_ivf_cell_broadcast(
+            emb.filter(F.col("embedding").isNotNull()), "embedding", cents
+        ).collect()
+    ]
+    want = []
+    for aid, al, av, _ in rows:
+        if aid >= 32:
+            continue
+        probed = sorted(range(16), key=lambda c: (-dot(av, units[c]), c))[:2]
+        negs = sorted(
+            (-round(cos(v, av), 6), vid, lbl)
+            for vid, lbl, v, cell in rows
+            if cell in probed and lbl != al
+        )[:3]
+        want += [(aid, vid, lbl, -c) for c, vid, lbl in negs]
+    assert got == sorted(want) and len(got) == 96
 
 
 def test_hybrid_adaptive_layout_dir_prong_identical_and_pruned(spark, tmp_path):

@@ -24,6 +24,41 @@ def test_query_runs_and_is_deterministic(spark, name):
     assert sorted(map(key, rows)) == sorted(map(key, again)), f"{name}: nondeterministic"
 
 
+# Declared rows whose operators lost a strategy option: each must still
+# match its DuckDB oracle (tools/oracle_check.py runs all of them).
+ORACLE_PARITY_ROWS = (
+    "quality_gate", "ccnet_buckets", "quality_ensemble", "zipf_fit",
+    "skew_report", "sliding_distinct", "label_propagation",
+    "hierarchy_resolve", "name_canonicalize", "hard_negatives_scoped",
+    "dedup_components",
+)
+
+
+@pytest.fixture(scope="module")
+def oracle_db():
+    import duckdb
+
+    from tools.oracle_check import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", ORACLE_PARITY_ROWS)
+def test_query_matches_duckdb_oracle(spark, oracle_db, name):
+    from tools.oracle_check import compare
+
+    q = REGISTRY[name]
+    cur = oracle_db.execute(q.oracle)
+    err = compare(
+        name, q.fn(spark, SF_SMOKE), cur.fetchall(), [d[0] for d in cur.description]
+    )
+    assert err is None, f"{name}: {err}"
+
+
 def test_registry_contract():
     # every query has a doc string and oracle-or-None; names are snake_case
     for name, q in REGISTRY.items():
@@ -133,40 +168,6 @@ def test_session_scale_confs_pinned(spark):
     assert conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
     assert conf.get("spark.sql.session.timeZone") == "UTC"
     assert conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
-
-
-def test_quality_gate_approx_dial_bounded_error(spark):
-    """The exact=False dial (percentile_approx, the 100 TB regime) produces
-    per-source medians within the [0.45, 0.55] exact-quantile band (rank
-    error bound 1/accuracy = 1e-4 << 0.05) and the same output schema."""
-    from pyspark.sql import functions as F
-
-    from team_126_spark.operators.textops import quality_gate
-    from team_126_spark.tables import table
-
-    docs = table(spark, SF_SMOKE, "documents")
-    approx = quality_gate(docs, "text", "doc_id", "source", exact=False)
-    exact = quality_gate(docs, "text", "doc_id", "source", exact=True)
-    assert approx.columns == exact.columns
-    am = {
-        r["source"]: r["src_median"]
-        for r in approx.select("source", "src_median").distinct().collect()
-    }
-    from team_126_spark.operators.textops import quality_expr
-
-    band = (
-        docs.select("source", quality_expr(F.col("text")).alias("q"))
-        .groupBy("source")
-        .agg(
-            F.percentile("q", F.lit(0.45)).alias("lo"),
-            F.percentile("q", F.lit(0.55)).alias("hi"),
-        )
-        .collect()
-    )
-    for r in band:
-        assert r["lo"] - 1e-6 <= am[r["source"]] <= r["hi"] + 1e-6, (
-            r["source"], r["lo"], am[r["source"]], r["hi"],
-        )
 
 
 def test_temperature_mix_semantics_and_float_margins(spark):

@@ -1055,11 +1055,12 @@ def test_ordered_ranks_matches_global_sort(spark):
 
 
 def test_label_propagation_int_encoding_parity_and_directed_seed(spark):
-    """VERDICT r9 #3 + ADVICE r9: (a) the int-dictionary scale dial
-    (encode_ids=True) produces IDENTICAL communities to the
-    string-native default on the two-cliques fixture; (b) on a
-    NON-symmetrized edge list, dst-only nodes are seeded too — every
-    endpoint of every edge gets a community (both paths)."""
+    """VERDICT r9 #3 + ADVICE r9: (a) communities are invariant under an
+    ORDER-PRESERVING int encoding of the node ids, done here in the test
+    (the lexicographic tie-break sees the same order either way): the
+    two-cliques fixture run on int ids and decoded equals the string run;
+    (b) on a NON-symmetrized edge list, dst-only nodes are seeded too —
+    every endpoint of every edge gets a community."""
     from team_126_spark.operators.relational import label_propagation
 
     und = []
@@ -1067,47 +1068,54 @@ def test_label_propagation_int_encoding_parity_and_directed_seed(spark):
                  ("x", "y"), ("y", "z"), ("x", "z"), ("c", "x")]:
         und += [(u, v), (v, u)]
     edges = spark.createDataFrame(und, ["a", "b"])
+    nid = {n: i for i, n in enumerate(sorted({n for e in und for n in e}))}
+    name = {i: n for n, i in nid.items()}
+    int_edges = spark.createDataFrame(
+        [(nid[u], nid[v]) for u, v in und], "a long, b long"
+    )
     enc = {
-        r["node"]: r["community"]
-        for r in label_propagation(edges, "a", "b", iters=4, encode_ids=True).collect()
+        name[r["node"]]: name[r["community"]]
+        for r in label_propagation(int_edges, "a", "b", iters=4).collect()
     }
     raw = {
         r["node"]: r["community"]
-        for r in label_propagation(
-            edges, "a", "b", iters=4, encode_ids=False
-        ).collect()
+        for r in label_propagation(edges, "a", "b", iters=4).collect()
     }
     assert enc == raw and set(enc) == {"a", "b", "c", "x", "y", "z"}
 
     # directed: q is dst-only, p is src-only — both must be labeled
     directed = spark.createDataFrame([("p", "q"), ("q2", "q")], ["a", "b"])
-    for flag in (True, False):
-        got = {
-            r["node"]: r["community"]
-            for r in label_propagation(
-                directed, "a", "b", iters=2, encode_ids=flag
-            ).collect()
-        }
-        assert set(got) == {"p", "q", "q2"}, flag
+    got = {
+        r["node"]: r["community"]
+        for r in label_propagation(directed, "a", "b", iters=2).collect()
+    }
+    assert set(got) == {"p", "q", "q2"}
 
 
 def test_skew_report_prune_bounds_window_input(spark):
     """VERDICT r9 #5: the per-partition top_k prefilter makes the global
     ranking window's input cluster-bounded even on a NEAR-UNIQUE key —
     pinned identical output (all five columns, including cumulative
-    shares) vs the unpruned path on both a skewed key and a near-unique
-    key, and the pruned plan carries two row_number windows (the
-    partitioned prefilter feeding the bounded global rank)."""
+    shares) to a driver-side count/sort reference on both a skewed key
+    and a near-unique key, and the plan carries two row_number windows
+    (the partitioned prefilter feeding the bounded global rank)."""
+    from collections import Counter
+
     from team_126_spark.operators.relational import skew_report
     from team_126_spark.tables import table
 
     orders = table(spark, "/root/testdata/sf0.001", "orders")
     for key, k in (("o_orderpriority", 3), ("o_orderkey", 7)):
+        vals = [r[0] for r in orders.select(key).collect()]
+        top = sorted(Counter(vals).items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+        want, cum = [], 0
+        for rank, (v, c) in enumerate(top, start=1):
+            cum += c
+            want.append(
+                (v, c, round(c / len(vals), 6), round(cum / len(vals), 6), rank)
+            )
         got = sorted(map(tuple, skew_report(orders, key, top_k=k).collect()))
-        want = sorted(
-            map(tuple, skew_report(orders, key, top_k=k, prune=False).collect())
-        )
-        assert got == want and len(got) == k, key
+        assert got == sorted(want) and len(got) == k, key
 
     plan = (
         skew_report(orders, "o_orderkey", top_k=7)
@@ -1216,25 +1224,50 @@ def test_grouped_ranks_matches_window_rank(spark):
 
 
 def test_quality_ensemble_scalable_dial_identical(spark):
-    """The scalable=True grouped-rank path produces the IDENTICAL result
-    to the window path on the fixture corpus — exact, not approximate
-    (ranks cannot be sketched; the scalable form just computes them
-    without a group-sized window partition)."""
+    """The grouped-rank ensemble produces the IDENTICAL ranks to an
+    inline group-partitioned row_number on the fixture corpus — exact,
+    not approximate (ranks cannot be sketched; grouped_ranks just
+    computes them without a group-sized window partition)."""
+    from pyspark.sql import Window
+
+    from team_126_spark.functions.text import tokens
     from team_126_spark.operators.textops import quality_ensemble
     from team_126_spark.tables import table
 
     docs = table(spark, "/root/testdata/sf0.001", "documents")
-    key = lambda r: tuple(str(v) for v in r)  # noqa: E731
-    a = sorted(map(key, quality_ensemble(docs, "text", "doc_id", "lang").collect()))
-    b = sorted(
-        map(
-            key,
-            quality_ensemble(
-                docs, "text", "doc_id", "lang", scalable=True
-            ).collect(),
+    t = tokens(F.col("text"))
+    sig = docs.select(
+        "doc_id",
+        "lang",
+        F.size(t).alias("n"),
+        F.when(F.size(t) > 0, F.size(F.array_distinct(t)) / F.size(t))
+        .otherwise(0.0)
+        .alias("ttr"),
+        F.when(
+            F.size(t) > 0,
+            F.aggregate(t, F.lit(0).cast("bigint"), lambda a, x: a + F.length(x))
+            / F.size(t),
         )
+        .otherwise(0.0)
+        .alias("mlen"),
     )
-    assert a == b and len(a) == 500
+
+    def rank(c):
+        w = Window.partitionBy("lang").orderBy(F.desc(c), F.asc("doc_id"))
+        return F.row_number().over(w)
+
+    want = {
+        r["doc_id"]: (r["a"], r["b"], r["c"])
+        for r in sig.select(
+            "doc_id", rank("n").alias("a"), rank("ttr").alias("b"),
+            rank("mlen").alias("c"),
+        ).collect()
+    }
+    got = {
+        r["doc_id"]: (r["r_tokens"], r["r_ttr"], r["r_len"])
+        for r in quality_ensemble(docs, "text", "doc_id", "lang").collect()
+    }
+    assert got == want and len(got) == 500
 
 
 def test_grouped_ranks_null_group_kept_and_matches_window(spark):
@@ -1262,100 +1295,73 @@ def test_grouped_ranks_null_group_kept_and_matches_window(spark):
 
 
 def test_ppl_buckets_scalable_keeps_null_language_rows(spark):
-    """ADVICE r10 consumer check: a NULL-language row survives the
-    scalable path (null-safe joins to counts) and lands in the same
-    bucket as the window path gives it."""
+    """ADVICE r10 consumer check: a NULL-language row survives ppl_buckets
+    (null-safe joins to counts) and lands in the same bucket as an inline
+    window ntile(3) gives it."""
+    from pyspark.sql import Window
+
     from team_126_spark.operators.textops import ppl_buckets
 
     rows = [(i, None if i % 4 == 0 else f"l{i % 2}", float(i)) for i in range(24)]
     scored = spark.createDataFrame(rows, ["doc_id", "lang", "surprisal"])
+    nt = F.ntile(3).over(Window.partitionBy("lang").orderBy("surprisal", "doc_id"))
     win = {
-        r["doc_id"]: r["ppl_bucket"]
-        for r in ppl_buckets(scored, "surprisal", "lang", "doc_id", exact=True).collect()
+        r["doc_id"]: ["head", "middle", "tail"][r["nt"] - 1]
+        for r in scored.select("doc_id", nt.alias("nt")).collect()
     }
-    for kwargs in ({"scalable": True}, {"exact": False}):
-        got = {
-            r["doc_id"]: r["ppl_bucket"]
-            for r in ppl_buckets(
-                scored, "surprisal", "lang", "doc_id", **({"exact": True} | kwargs)
-            ).collect()
-        }
-        assert set(got) == set(win), kwargs  # null-lang rows retained
-        if kwargs.get("scalable"):
-            assert got == win
-
-
-def test_auto_dial_picks_path_by_observed_group_size(spark):
-    """scalable='auto' (VERDICT r10 #1): below auto_rows the window path
-    runs (plan has a group-partitioned window, no _p column); above it
-    every windowspecdefinition carries grouped_ranks' task-partition
-    column. Both branches are exact so results never differ."""
-    import contextlib
-    import io
-
-    from team_126_spark.operators.textops import ppl_buckets, quality_ensemble
-    from team_126_spark.tables import table
-
-    docs = table(spark, "/root/testdata/sf0.001", "documents")
-    scored = docs.select(
-        "doc_id", "lang", F.length("text").cast("double").alias("surprisal")
-    )
-
-    def specs(df):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return [ln for ln in buf.getvalue().splitlines() if "windowspecdefinition" in ln]
-
-    small = ppl_buckets(scored, "surprisal", "lang", "doc_id", scalable="auto",
-                        auto_rows=10**9)
-    assert any("_p#" not in ln for ln in specs(small))  # window path
-    big = ppl_buckets(scored, "surprisal", "lang", "doc_id", scalable="auto",
-                      auto_rows=10)
-    assert all("_p#" in ln for ln in specs(big))  # grouped_ranks path
-    key = lambda r: (r["doc_id"], r["ppl_bucket"])  # noqa: E731
-    assert sorted(map(key, small.collect())) == sorted(map(key, big.collect()))
-
-    qe_big = quality_ensemble(docs, "text", "doc_id", "lang", scalable="auto",
-                              auto_rows=10)
-    assert all("_p#" in ln for ln in specs(qe_big))
-    qe_small = quality_ensemble(docs, "text", "doc_id", "lang", scalable="auto",
-                                auto_rows=10**9)
-    assert any("_p#" not in ln for ln in specs(qe_small))
+    got = {
+        r["doc_id"]: r["ppl_bucket"]
+        for r in ppl_buckets(scored, "surprisal", "lang", "doc_id").collect()
+    }
+    assert got == win and len(got) == 24  # null-lang rows retained
 
 
 def test_sliding_distinct_sketch_only_dial_and_span_guard(spark):
-    """VERDICT r10 #6: exact=False emits (day, sketch_nd) from the
-    daily-sketch table only (raw rows never cover-explode) and the
-    estimate sits within the HLL bound of the exact count on the
-    fixture; exact=True refuses a 90-day span (the 90x raw-row explode)
-    unless max_exact_span is raised."""
+    """VERDICT r10 #6: on the fixture, exact_nd equals a driver-side
+    trailing-window distinct count, a sketch-only estimate (per-day HLL
+    sketches unioned over each trailing window, built inline) sits within
+    the HLL bound of it and every sketch_ok verdict is TRUE; a 90-day
+    span (the 90x raw-row explode) is refused unless max_exact_span is
+    raised."""
+    import datetime as dt
+
     import pytest as _pytest
 
     from team_126_spark.operators.relational import sliding_distinct
     from team_126_spark.tables import table
 
     events = table(spark, "/root/testdata/sf0.001", "events")
-    exact = {
-        r["day"]: r["exact_nd"]
+    got = {
+        r["day"]: (r["exact_nd"], r["sketch_ok"])
         for r in sliding_distinct(events, "ts", "user_id", window_days=7).collect()
     }
-    sk = {
-        r["day"]: r["sketch_nd"]
-        for r in sliding_distinct(
-            events, "ts", "user_id", window_days=7, exact=False
-        ).collect()
+    users_by_day: dict = {}
+    for r in events.select(F.to_date("ts").alias("d"), "user_id").collect():
+        users_by_day.setdefault(r["d"], set()).add(r["user_id"])
+    want = {}
+    for d0, users in users_by_day.items():
+        for i in range(7):
+            want.setdefault(d0 + dt.timedelta(days=i), set()).update(users)
+    assert {d: n for d, (n, _) in got.items()} == {
+        d: len(u) for d, u in want.items()
     }
-    assert set(sk) == set(exact)
+    assert all(ok for _, ok in got.values())
+
+    daily = events.groupBy(F.to_date("ts").alias("_d")).agg(
+        F.hll_sketch_agg("user_id").alias("_sk")
+    )
+    sk = {
+        r["day"]: r["nd"]
+        for r in daily.select(
+            F.explode(F.sequence("_d", F.date_add("_d", 6))).alias("day"), "_sk"
+        )
+        .groupBy("day")
+        .agg(F.hll_sketch_estimate(F.hll_union_agg("_sk")).alias("nd"))
+        .collect()
+    }
+    assert set(sk) == set(got)
     assert all(
-        abs(sk[d] - exact[d]) <= max(3.0, 0.15 * exact[d]) for d in exact
+        abs(sk[d] - got[d][0]) <= max(3.0, 0.15 * got[d][0]) for d in got
     )
     with _pytest.raises(RuntimeError, match="max_exact_span"):
         sliding_distinct(events, "ts", "user_id", window_days=90)
-    # sketch arm has no span bound; a 90-day window is fine there
-    assert (
-        sliding_distinct(
-            events, "ts", "user_id", window_days=90, exact=False
-        ).count()
-        > 0
-    )
